@@ -81,6 +81,10 @@ class TransformerRegistry:
 
     def __init__(self) -> None:
         self._by_name: dict[str, Transformer] = {}
+        # bumped on every registration: request templates built from a
+        # transformer's builder fold it into their cache key, so
+        # re-registering a name is seen by the next request
+        self.version = 0
 
     def register(
         self,
@@ -95,6 +99,7 @@ class TransformerRegistry:
         t = Transformer(name, builder, tuple(args), defaults or {}, description,
                         arg_types or {}, value_schema)
         self._by_name[_canon(name)] = t
+        self.version += 1
         return t
 
     def register_pandas(

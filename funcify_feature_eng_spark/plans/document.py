@@ -30,10 +30,13 @@ Argument value sources mirror the MaterializationEdge kinds
 VARIABLE_VALUE_PROVIDED (unknown variable → error, like graphql-java
 validation), any other literal is DIRECT_ARGUMENT_VALUE_PROVIDED, and an
 omitted argument keeps the declared default (DEFAULT_ARGUMENT_VALUE_PROVIDED).
-Compiled plans are cached on the model keyed by the canonical document +
-variable-key set — the analog of the 24h plan cache keyed by
-(metamodel.created, variable keys, opName, document)
-(``DefaultSingleRequestMaterializationGraphService.kt:105-180``).
+Compiled plans are cached on the model keyed by the canonical document,
+its variables and the model's mutation count — the analog of the 24h plan
+cache keyed by (metamodel.created, variable keys, opName, document)
+(``DefaultSingleRequestMaterializationGraphService.kt:105-180``). The
+cache is a bounded LRU (:mod:`funcify_feature_eng_spark.plans.cache`):
+its key holds variable values, so an unbounded map would grow by one
+entry per distinct variable set.
 """
 
 from __future__ import annotations
@@ -277,19 +280,14 @@ def compile_document(
     return req, out_cols, colls
 
 
-def materialize_document(
+def _compiled(
     model: FeatureModel, spine: DataFrame, doc: dict[str, Any]
-) -> DataFrame:
-    """Execute a document-shaped request on a spine through the base model.
-
-    Request-scoped compiled models are cached on the base model keyed by the
-    canonical document (the 24h-plan-cache analog); variable VALUES are
-    applied at compile because they parameterize column expressions — a
-    changed value is a different plan, hence part of the key via args."""
-    cache = getattr(model, "_doc_cache", None)
-    if cache is None:
-        cache = {}
-        model._doc_cache = cache
+) -> tuple[FeatureModel, list[str], dict[str, dict]]:
+    """:func:`compile_document`, cached on the base model (a bounded LRU)
+    keyed by the canonical document (the 24h-plan-cache analog); variable
+    VALUES are applied at compile because they parameterize column
+    expressions — a changed value is a different plan, hence part of the
+    key via args."""
     # spine columns join the key: compile now validates flat selections
     # against them, so a compile cached for one spine must not be reused
     # for a spine with different columns
@@ -302,19 +300,59 @@ def materialize_document(
         # made AFTER a document ran must invalidate that snapshot — the
         # tabular path's _plan_cache clears on mutation, and without this
         # term the two entry points disagreed on a mutated model
-        getattr(model, "_mutations", 0),
+        model._mutations,
     )
-    hit = cache.get(key)
+    hit = model._doc_cache.get(key)
     if hit is None:
         hit = compile_document(model, doc, spine.columns)
-        cache[key] = hit
-    req, out_cols, colls = hit
+        model._doc_cache.put(key, hit)
+    return hit
+
+
+def materialize_document(
+    model: FeatureModel, spine: DataFrame, doc: dict[str, Any]
+) -> DataFrame:
+    """Execute a document-shaped request on a spine through the base model."""
+    return document_frame(model, spine, doc)[0]
+
+
+def document_frame(
+    model: FeatureModel,
+    spine: DataFrame,
+    doc: dict[str, Any],
+    keep_key: bool = False,
+) -> tuple[DataFrame, list[str]]:
+    """:func:`materialize_document` as ``(frame, outputs)``. The frame's
+    leading columns are the outputs; with ``keep_key`` the model's entity
+    key column follows them when no output already carries it under its
+    own name, so a caller can filter the frame by entity and then drop
+    the key."""
+    req, out_cols, colls = _compiled(model, spine, doc)
     variables = doc.get("variables")
-    if not colls:
-        # variables also feed J1 tier-6 resolution (names satisfiable from
-        # the request's variable set), not just feature arguments
-        return req.materialize(spine, out_cols, variables=variables)
-    return _materialize_collections(req, spine, colls, variables, out_cols)
+    if colls:
+        return _materialize_collections(
+            req, spine, colls, variables, out_cols, keep_key
+        )
+    cols = list(out_cols)
+    if keep_key and req.entity_key not in cols:
+        cols.append(req.entity_key)
+    # variables also feed J1 tier-6 resolution (names satisfiable from
+    # the request's variable set), not just feature arguments
+    return req.materialize(spine, cols, variables=variables), list(out_cols)
+
+
+def document_stores(
+    model: FeatureModel, spine: DataFrame, doc: dict[str, Any]
+) -> list:
+    """The registered stores (DataFrames or FeatureStores) the compiled
+    request reads: the right sides of its as-of and interval stages."""
+    req, out_cols, colls = _compiled(model, spine, doc)
+    names = [c for c in out_cols if c not in colls]
+    for cspec in colls.values():
+        names += cspec["field_cols"]
+    var_keys = tuple(sorted(doc.get("variables", {})))
+    plan = req.compile(names, spine.columns, var_keys)
+    return [req._stores[s.store_name] for s in plan if s.store_name is not None]
 
 
 def _materialize_collections(
@@ -323,7 +361,8 @@ def _materialize_collections(
     colls: dict[str, dict],
     variables: dict | None,
     out_cols: list[str],
-) -> DataFrame:
+    keep_key: bool = False,
+) -> tuple[DataFrame, list[str]]:
     """ListSegment fan-in/fan-out: materialize element-grain fields, then
     either collect them into ordered ``array<struct>`` columns (one row per
     entity — the nested-document composition direction of
@@ -339,7 +378,10 @@ def _materialize_collections(
     groupBy(entity) with one ``collect_list`` per collection — ordering is
     encoded in the struct prefix (the model's order columns) and enforced
     with ``array_sort``, then stripped, so no per-group sort/window is needed
-    beyond the one aggregation exchange."""
+    beyond the one aggregation exchange.
+
+    Returns ``(frame, outputs)`` like :func:`document_frame`, ``keep_key``
+    included."""
     from pyspark.sql import functions as F
 
     entity = req.entity_key
@@ -390,19 +432,24 @@ def _materialize_collections(
     for cname, cspec in colls.items():
         out = out.withColumn(cname, F.transform(F.col(cname), _strip(cspec["field_cols"])))
     keep = out_cols if any(_selects_entity(c) for c in out_cols) else [entity] + out_cols
+    key = [entity] if keep_key and entity not in keep else []
     if unnest_name is None:
-        return out.select(*keep)
+        return out.select(*keep, *key), list(keep)
     fields = colls[unnest_name]["field_cols"]
     pre = [c for c in keep if c != unnest_name]
     out = out.select(
-        *pre, F.posexplode(F.col(unnest_name)).alias(f"{unnest_name}_idx", "__e")
+        *pre, *key,
+        F.posexplode(F.col(unnest_name)).alias(f"{unnest_name}_idx", "__e"),
     )
     # re-expand in document order, the unnested fields at the collection's slot
     final: list = []
+    names: list[str] = []
     for c in keep:
         if c == unnest_name:
             final.append(F.col(f"{unnest_name}_idx"))
             final.extend(F.col("__e")[f].alias(f) for f in fields)
+            names += [f"{unnest_name}_idx", *fields]
         else:
             final.append(F.col(c))
-    return out.select(*final)
+            names.append(c)
+    return out.select(*final, *key), names

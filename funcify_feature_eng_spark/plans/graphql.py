@@ -55,6 +55,41 @@ its SDL metamodel, ``netflix_movies_and_tv_shows.graphqls``):
 - Fields under ``features`` select declared features; arguments
   parameterize them (variants), aliases rename outputs.
 
+Prepared entity lookups (the reference compiles a request once and serves
+later ones from its plan cache, keyed by document and variable keys —
+``DefaultSingleRequestMaterializationGraphService.kt:78-84,105-180``):
+
+- What is cached: when every entity-lookup argument resolves to the
+  model's ``entity_key``, the request is lowered once over the WHOLE spine
+  and that template DataFrame (outputs plus the entity key column) is kept
+  on the base model. Each request is then
+  ``template.filter(entity_key == value)`` minus the key column (a request
+  without lookups is the whole template): no lowering, no per-request
+  model clone, no Py4J rebuild of the lineage.
+  Parsing, variable coercion and :func:`validate_request` still run on
+  every request, so errors are unchanged.
+- Key: query text, operation name, the lowered shape, every variable value
+  except the lookup-bound ones, the spine object itself (held, not its
+  ``id()``), the model's mutation count (``declare_*``, ``alias``,
+  ``register_store``, ``register_source``) and the transformer registry's
+  version. The template is built without the bound variables, so a build
+  that reads one (a transformer argument, a tier-6 name) fails there and
+  the request stays filter-first instead of baking in the first id.
+- Bound: a fixed-capacity LRU (:mod:`funcify_feature_eng_spark.plans.cache`);
+  no knob.
+- Why filtering after the features is exact: every window partitions by
+  the entity, every as-of, interval and collection groups by it, and
+  transformers, sources and variables work row by row — so rows of one
+  entity never see another's. Catalyst pushes the entity predicate through
+  the windows, the union-window and broadcast as-of and the collection
+  aggregate into every scan, so the executed plan equals the filter-first
+  one (``tests/test_graphql_prepared.py`` guards the pushdown).
+- Filter-first, uncached: lookups on a non-entity column (they change what
+  the windows see) and plans reading a
+  :class:`~funcify_feature_eng_spark.store.FeatureStore` (its file listing
+  is fixed when the DataFrame is built; a template would miss later
+  publishes).
+
 Known mapping caveat: a quoted STRING literal beginning with ``$`` (e.g.
 ``tag(prefix: "$x")``) is passed through as the engine's ``$name``
 variable-reference convention and will resolve as a variable downstream —
@@ -70,7 +105,13 @@ from dataclasses import dataclass, field as dc_field
 from typing import Any
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
+from funcify_feature_eng_spark.plans.document import (
+    document_frame,
+    document_stores,
+    materialize_document,
+)
 from funcify_feature_eng_spark.plans.model import FeatureModel, PlanError
 
 # ---------------------------------------------------------------- lexer
@@ -732,14 +773,61 @@ def materialize_graphql(
     the dict document → one shared compile/materialize path. Variable
     coercion follows the reference's GraphQL semantics: missing non-null
     variables error; declared defaults apply (P5/P7,
-    ``MaterializationEdge.kt:7-14``)."""
-    from pyspark.sql import functions as F
+    ``MaterializationEdge.kt:7-14``).
 
-    from funcify_feature_eng_spark.plans.document import materialize_document
-
+    Entity lookups are served from a prepared template when they can be
+    (module docstring, "Prepared entity lookups"); every other request is
+    lowered onto its filtered spine as before."""
     lowered = lower_graphql(src, operation_name, variables)
-    op = lowered.operation
+    merged_vars = _coerce_variables(lowered.operation, variables)
 
+    # ParseAndValidate analog: every selection checked against the declared
+    # schema before any J1 resolution — precise errors name document paths
+    validate_request(model, lowered, spine.columns, tuple(merged_vars))
+
+    # variables read by the lookup filters; when every filter binds the
+    # entity key, their values only choose rows of the template
+    bound = {
+        v[1:] for v in lowered.filters.values()
+        if isinstance(v, str) and v.startswith("$")
+    }
+    key = _template_key(model, spine, src, operation_name, lowered,
+                        merged_vars, bound)
+    if key is not None:
+        tpl = model._gql_templates.get(key, _MISS)
+        if tpl is _MISS:
+            tpl = _prepare_template(model, spine, lowered, merged_vars, bound)
+            model._gql_templates.put(key, tpl)
+        if tpl is not None:
+            out = tpl.frame
+            for v in lowered.filters.values():
+                out = out.filter(F.col(model.entity_key) == F.lit(
+                    _filter_value(v, merged_vars)))
+            return out.drop(model.entity_key) if tpl.drop_key else out
+
+    # filter-first: lower the request over the rows of the looked-up
+    # entities only
+    req, doc = _request_model(model, lowered, merged_vars)
+    filtered = spine
+    for resolved, value in _resolve_filters(req, spine, lowered, doc):
+        filtered = filtered.filter(F.col(resolved) == F.lit(value))
+    return materialize_document(req, filtered, doc)
+
+
+_MISS = object()
+
+
+@dataclass(frozen=True)
+class _Template:
+    """A request shape lowered once over the whole spine."""
+
+    frame: DataFrame  # the outputs, then the entity key when drop_key
+    drop_key: bool  # the entity key column is not one of the outputs
+
+
+def _coerce_variables(op: Operation, variables: dict[str, Any] | None) -> dict[str, Any]:
+    """Provided variables merged over declared defaults; missing required
+    and undeclared variables are errors."""
     merged_vars = dict(variables or {})
     for vname, vdef in op.variable_defs.items():
         if vname in merged_vars:
@@ -756,13 +844,15 @@ def materialize_graphql(
             f"GraphQL: variables {sorted(unknown)} are not declared by the "
             f"operation (declared: {sorted(op.variable_defs)})"
         )
+    return merged_vars
 
-    # ParseAndValidate analog: every selection checked against the declared
-    # schema before any J1 resolution — precise errors name document paths
-    validate_request(model, lowered, spine.columns, tuple(merged_vars))
 
-    # request-scoped model clone: ad-hoc transformer invocations register as
-    # transformer features wired to synthesized literal variables (tier 6)
+def _request_model(
+    model: FeatureModel, lowered: LoweredRequest, merged_vars: dict[str, Any]
+) -> tuple[FeatureModel, dict[str, Any]]:
+    """Request-scoped model clone and the document it runs: ad-hoc
+    transformer invocations register as transformer features wired to
+    synthesized literal variables (tier 6)."""
     req = FeatureModel(
         entity_key=model.entity_key, order=model.order,
         event_time=model.event_time, registry=model.registry,
@@ -774,10 +864,8 @@ def materialize_graphql(
     req._sources = dict(model._sources)
     req._last_updated = dict(model._last_updated)
 
-    doc = {"select": dict(lowered.doc["select"])}
-    if merged_vars:
-        doc["variables"] = merged_vars
-    feats = dict(doc["select"].get("features", {}))
+    doc_vars = dict(merged_vars)
+    feats = dict(lowered.doc["select"].get("features", {}))
     for i, (out_name, tname, targs) in enumerate(lowered.transformer_calls):
         arg_cols: list[str] = []
         for k, v in targs.items():
@@ -785,15 +873,33 @@ def materialize_graphql(
                 arg_cols.append(v[1:])  # variable-bound arg (tier 6)
             else:
                 lit_name = f"__gql_lit_{i}_{k}"
-                merged_vars[lit_name] = v
-                doc["variables"] = merged_vars
+                doc_vars[lit_name] = v
                 arg_cols.append(lit_name)
         req.declare_transformer_feature(out_name, tname, args=arg_cols)
         feats[out_name] = {}
+    doc: dict[str, Any] = {"select": dict(lowered.doc["select"])}
     if feats:
         doc["select"]["features"] = feats
+    if doc_vars:
+        doc["variables"] = doc_vars
+    return req, doc
 
-    filtered = spine
+
+def _filter_value(v: Any, variables: dict[str, Any]) -> Any:
+    if isinstance(v, str) and v.startswith("$"):
+        vname = v[1:]
+        if vname not in variables:
+            raise PlanError(f"GraphQL: filter references undefined variable ${vname}")
+        return variables[vname]
+    return v
+
+
+def _resolve_filters(
+    req: FeatureModel, spine: DataFrame, lowered: LoweredRequest, doc: dict[str, Any]
+) -> list[tuple[str, Any]]:
+    """(spine column, value) per entity-lookup argument."""
+    variables = doc.get("variables", {})
+    out: list[tuple[str, Any]] = []
     for col_name, v in lowered.filters.items():
         # validate_request guaranteed kind == "column" against the BASE
         # model — but this resolution runs on the request-scoped clone
@@ -801,23 +907,85 @@ def materialize_graphql(
         # like the lookup argument would shadow the spine column in the
         # exact-feature tier; re-assert the kind so the collision is a
         # precise error, not an AnalysisException on a wrong column
-        _kind, resolved = req.resolve_name(
-            col_name, spine.columns, tuple(merged_vars)
-        )
-        if _kind != "column":
+        kind, resolved = req.resolve_name(col_name, spine.columns, tuple(variables))
+        if kind != "column":
             raise PlanError(
                 f"GraphQL: entity-lookup argument {col_name!r} collides "
-                f"with a request-scoped {_kind} of the same name — rename "
+                f"with a request-scoped {kind} of the same name — rename "
                 "the transformer output alias"
             )
-        value = v
-        if isinstance(v, str) and v.startswith("$"):
-            vname = v[1:]
-            if vname not in merged_vars:
-                raise PlanError(
-                    f"GraphQL: filter references undefined variable ${vname}"
-                )
-            value = merged_vars[vname]
-        filtered = filtered.filter(F.col(resolved) == F.lit(value))
+        out.append((resolved, _filter_value(v, variables)))
+    return out
 
-    return materialize_document(req, filtered, doc)
+
+def _frozen(v: Any) -> Any:
+    """Hashable, type-exact form of a variable value (1, 1.0 and True
+    stay distinct)."""
+    if isinstance(v, dict):
+        return ("dict", tuple((k, _frozen(x)) for k, x in v.items()))
+    if isinstance(v, (list, tuple)):
+        return (type(v), tuple(_frozen(x) for x in v))
+    return (type(v), v)
+
+
+def _template_key(
+    model: FeatureModel,
+    spine: DataFrame,
+    src: str,
+    operation_name: str | None,
+    lowered: LoweredRequest,
+    merged_vars: dict[str, Any],
+    bound: set[str],
+) -> tuple | None:
+    """Cache key of a request's template, None when a value is unhashable.
+
+    The lowered shape joins the text because @skip/@include may read a
+    bound variable; the spine is held itself (an ``id()`` could be reused
+    by a later frame)."""
+    key = (
+        src,
+        operation_name,
+        tuple(sorted((k, _frozen(v)) for k, v in merged_vars.items() if k not in bound)),
+        _frozen([lowered.doc, lowered.filters, lowered.transformer_calls]),
+        spine,
+        model._mutations,
+        model.registry.version,
+    )
+    try:
+        hash(key)
+    except TypeError:
+        return None
+    return key
+
+
+def _prepare_template(
+    model: FeatureModel,
+    spine: DataFrame,
+    lowered: LoweredRequest,
+    merged_vars: dict[str, Any],
+    bound: set[str],
+) -> _Template | None:
+    """Lower the request over the whole spine, keeping the entity key, or
+    None when it must stay filter-first: a lookup on a non-entity column,
+    a plan reading a FeatureStore, or a build that needs a bound variable.
+    Raises exactly what the filter-first path raises before its build."""
+    from funcify_feature_eng_spark.store import FeatureStore
+
+    req, doc = _request_model(model, lowered, merged_vars)
+    filters = _resolve_filters(req, spine, lowered, doc)
+    if any(resolved != model.entity_key for resolved, _ in filters):
+        return None
+    # build without the bound variables: a build that reads one would bake
+    # the first request's id into the template, and fails here instead
+    doc["variables"] = {
+        k: v for k, v in doc.get("variables", {}).items() if k not in bound
+    }
+    try:
+        if any(isinstance(s, FeatureStore) for s in document_stores(req, spine, doc)):
+            return None
+        frame, outputs = document_frame(req, spine, doc, keep_key=True)
+    except PlanError:
+        return None
+    if frame.columns.count(model.entity_key) != 1:
+        return None  # an unnested field shares the key's name
+    return _Template(frame, model.entity_key not in outputs)

@@ -37,6 +37,7 @@ from funcify_feature_eng_spark.functions.registry import TransformerRegistry, de
 from funcify_feature_eng_spark.functions.scalars import to_snake_case
 from funcify_feature_eng_spark.operators import windows as W
 from funcify_feature_eng_spark.operators.asof import asof_join
+from funcify_feature_eng_spark.plans.cache import PLAN_CACHE_CAPACITY, LRUCache
 
 _WINDOW_OPS = {
     "lag", "lead", "ffill", "ffill_strict", "bfill", "gap", "session", "row_number",
@@ -113,10 +114,14 @@ class FeatureModel:
         # temporal attribute (LastUpdatedCoordinatesRegistry.kt:22-35)
         self._last_updated: dict[str, str] = {}
         self._plan_cache: dict[tuple[str, ...], list[FeatureSpec]] = {}
-        # bumped on every declaration/alias/source registration; external
-        # caches snapshotting this model (plans/document._doc_cache) fold
-        # it into their keys so model mutation invalidates them
+        # bumped on every declaration/alias/source registration; the request
+        # caches below snapshot this model and fold it into their keys, so
+        # model mutation invalidates them
         self._mutations: int = 0
+        # compiled documents (plans/document.py) and prepared GraphQL
+        # lookup templates (plans/graphql.py), both bounded LRU maps
+        self._doc_cache = LRUCache(PLAN_CACHE_CAPACITY)
+        self._gql_templates = LRUCache(PLAN_CACHE_CAPACITY)
 
     # ------------------------------------------------------------- declare
     def register_store(self, name: str, store, last_updated: str | None = None) -> None:

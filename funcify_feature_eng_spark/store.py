@@ -34,11 +34,31 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DataType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from funcify_feature_eng_spark.operators.asof import asof_join
 from funcify_feature_eng_spark.operators.util import release
 
 STORE_COLUMNS = ["feature_id", "conv_id", "params_hash", "value", "value_at_ts", "calculated_ts"]
+
+
+def _store_schema(entity_type: DataType) -> StructType:
+    """The column types ``publish`` writes; ``conv_id`` has the type of
+    the published entity column."""
+    return StructType([
+        StructField("feature_id", StringType()),
+        StructField("conv_id", entity_type),
+        StructField("params_hash", StringType()),
+        StructField("value", StringType()),
+        StructField("value_at_ts", TimestampType()),
+        StructField("calculated_ts", TimestampType()),
+    ])
 
 
 def contextual_params_hash(params: dict[str, Any] | None) -> str:
@@ -84,25 +104,35 @@ class FeatureStore:
             impl = ""
         return impl.endswith(".SparkCatalog") and "iceberg" in impl.lower()
 
-    def read(self, feature_id: str | None = None) -> DataFrame:
+    def read(
+        self, feature_id: str | None = None, entity_type: DataType | None = None
+    ) -> DataFrame:
+        """The stored values, optionally one feature's.
+
+        With ``entity_type`` (the type of the spine's entity column, which
+        ``publish`` copies into ``conv_id``) a parquet store is read with
+        the schema ``publish`` writes instead of an inferred one: inference
+        runs one Spark job per read, while the plan is still being built.
+        A file column written as ``timestamp_ntz`` reads as ``timestamp``
+        with the same wall-clock value in the engine's UTC session. Without
+        it the schema is inferred, so any stored entity type reads."""
         if self._is_table:
             df = self.spark.read.table(self.location)
         else:
+            reader = self.spark.read
+            if entity_type is not None:
+                reader = reader.schema(_store_schema(entity_type))
             try:
-                df = self.spark.read.parquet(self.location)
+                df = reader.parquet(self.location)
             except Exception:
-                return self._empty()
+                return self._empty(entity_type)
         if feature_id is not None:
             # partition-pruned on Iceberg (store is partitioned by feature_id)
             df = df.filter(F.col("feature_id") == feature_id)
         return df
 
-    def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [],
-            "feature_id string, conv_id string, params_hash string, "
-            "value string, value_at_ts timestamp, calculated_ts timestamp",
-        )
+    def _empty(self, entity_type: DataType | None = None) -> DataFrame:
+        return self.spark.createDataFrame([], _store_schema(entity_type or StringType()))
 
     # ----------------------------------------------------------- lifecycle
     def read_through(
@@ -139,7 +169,7 @@ class FeatureStore:
         # storage schema keeps the canonical entity column name (conv_id);
         # rename to the caller's entity_col so the as-of keys line up
         store = (
-            self.read(feature_id)
+            self.read(feature_id, spine.schema[self.entity_col].dataType)
             .filter(F.col("params_hash") == ph)
             .withColumnRenamed("conv_id", self.entity_col)
         )

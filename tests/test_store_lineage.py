@@ -393,3 +393,67 @@ def test_expire_knowledge_frontier_preserves_bitemporal_reads(spark, tmp_store):
     assert val("2025-01-15 00:00:00") == 1.0  # pre-correction knowledge
     assert val("2025-02-15 00:00:00") == 2.0  # correction visible
     assert val("2024-12-01 00:00:00") is None  # before any knowledge
+
+
+def test_pinned_read_matches_inferred_on_pyarrow_store(spark, data_dir, transcripts):
+    """The session dataset's store is written by pyarrow with timestamp_ntz
+    columns; read_through pins publish's types and must answer exactly as
+    an as-of over the inferred-schema read of the same files."""
+    from pyspark.sql.types import StringType, TimestampType
+
+    from funcify_feature_eng_spark.operators.asof import asof_join
+
+    path = os.path.join(data_dir, "feature_store.parquet")
+    fid = "features/convFeatures/storeValue"
+    store = FeatureStore(spark, path)
+    pinned = store.read(entity_type=StringType())
+    assert [f.dataType for f in pinned.schema.fields] == [
+        StringType(), StringType(), StringType(), StringType(), TimestampType(), TimestampType()
+    ]
+    got = store.read_through(transcripts, fid, "v", params_hash="default",
+                             allow_exact_matches=False)
+    inferred = (
+        spark.read.parquet(path)
+        .filter((F.col("feature_id") == fid) & (F.col("params_hash") == "default"))
+    )
+    assert dict(inferred.dtypes)["value_at_ts"] == "timestamp_ntz"
+    want = asof_join(transcripts, inferred, on=["conv_id"], left_ts="ts",
+                     right_ts="value_at_ts",
+                     value_cols={"value": "v", "value_at_ts": "v_at_ts"},
+                     allow_exact_matches=False, right_order=["calculated_ts", "value"])
+
+    def answers(df):
+        return sorted(df.select("conv_id", "turn_idx", "v",
+                                F.col("v_at_ts").cast("string")).collect())
+
+    rows = answers(got)
+    assert rows == answers(want)
+    assert sum(r["v"] is not None for r in rows) > 0
+
+
+def test_read_through_starts_no_job_before_action(spark, tmp_store):
+    spine = _spine(spark)
+    tmp_store.publish(spine.withColumn("f", F.col("turn_idx")), "features/f", "f")
+    sc = spark.sparkContext
+    group = "read_through_build"
+    sc.setJobGroup(group, "jobs started while the plan is built")
+    try:
+        out = tmp_store.read_through(spine, "features/f", "f_val")
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        # the probe sees jobs: the inferred-schema read runs one
+        tmp_store.read()
+        assert sc.statusTracker().getJobIdsForGroup(group) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert out.count() == 3
+
+
+def test_missing_store_reads_empty_with_entity_type(spark, tmp_path):
+    from pyspark.sql.types import LongType
+
+    store = FeatureStore(spark, str(tmp_path / "absent"), entity_col="user_id")
+    assert store.read(entity_type=LongType()).schema["conv_id"].dataType == LongType()
+    spine = spark.createDataFrame([(7, "2024-01-01 00:00:00")], "user_id long, ts string")
+    spine = spine.withColumn("ts", F.col("ts").cast("timestamp"))
+    rows = store.read_through(spine, "f", "f_val").collect()
+    assert [(r["user_id"], r["f_val"]) for r in rows] == [(7, None)]
